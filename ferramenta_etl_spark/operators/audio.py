@@ -229,14 +229,6 @@ def trim_silence(media_df: DataFrame, threshold: int = 512) -> DataFrame:
     )
 
 
-FINGERPRINT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("fp", T.LongType()),
-    ]
-)
-
-
 def audio_fingerprints(media_df: DataFrame) -> DataFrame:
     """64-bit energy-envelope difference hash per clip — the audio
     sibling of the image dHash (round 12), completing the multimodal
@@ -251,42 +243,23 @@ def audio_fingerprints(media_df: DataFrame) -> DataFrame:
     than 65 samples (or malformed rows) yield a null fp — visible
     downstream, batch intact. Narrow Arrow-batched map, no shuffle;
     only 16 bytes/clip ever shuffle."""
-    from .multimodal import _bits_to_u64, _signed64
+    from .multimodal import _bits_to_u64, _map_fingerprints
 
-    def batches(it: Iterator) -> Iterator:
+    def fingerprint(raw, rate):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, fps = [], []
-            for did, raw, rate in zip(
-                pdf["doc_id"], pdf["media"], pdf["sample_rate"]
-            ):
-                ids.append(None if pd.isna(did) else int(did))
-                pcm = _pcm(raw, rate)
-                if pcm is None or len(pcm) < 65:
-                    fps.append(None)
-                    continue
-                env = np.array(
-                    [
-                        f.mean()
-                        for f in np.array_split(
-                            np.abs(pcm.astype(np.int64)), 65
-                        )
-                    ]
-                )
-                # bit packing + signed conversion shared with the image
-                # dHash (review r12: two drifting copies is how the
-                # vectorization fix reaches one modality and not the
-                # other)
-                fps.append(_signed64(_bits_to_u64(env[:-1] > env[1:])))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+        pcm = _pcm(raw, rate)
+        if pcm is None or len(pcm) < 65:
+            return None
+        env = np.array(
+            [f.mean() for f in np.array_split(np.abs(pcm.astype(np.int64)), 65)]
+        )
+        # bit packing + signed conversion shared with the image dHash
+        # (review r12: two drifting copies is how the vectorization fix
+        # reaches one modality and not the other)
+        return _bits_to_u64(env[:-1] > env[1:])
 
-    return media_df.select("doc_id", "media", "sample_rate").mapInPandas(
-        batches, FINGERPRINT_SCHEMA
-    )
+    return _map_fingerprints(media_df, ("media", "sample_rate"), fingerprint)
 
 
 def audio_near_dup_pairs(

@@ -565,6 +565,29 @@ def _signed64(fp: int) -> int:
     return fp - (1 << 64) if fp >= (1 << 63) else fp
 
 
+def _map_fingerprints(df: DataFrame, cols: tuple, fingerprint) -> DataFrame:
+    """``(doc_id, fp)`` per row of ``df``, where ``fingerprint(*values of
+    cols)`` gives the row's unsigned 64-bit hash or None for a malformed
+    row. Arrow in and Arrow out with both columns typed int64: through
+    pandas, one null in a batch turns an int64 column into float64 and
+    silently rounds every id and fingerprint in that batch to 53
+    significant bits."""
+
+    def batches(it: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        for batch in it:
+            rows = zip(*(batch.column(c).to_pylist() for c in cols))
+            # signed-long conversion keeps bit 63 inside LongType
+            fps = [None if (fp := fingerprint(*r)) is None else _signed64(fp) for r in rows]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id").cast(pa.int64()), pa.array(fps, pa.int64())],
+                names=["doc_id", "fp"],
+            )
+
+    return df.select("doc_id", *cols).mapInArrow(batches, DHASH_SCHEMA)
+
+
 def dhash_images(media_df: DataFrame) -> DataFrame:
     """64-bit difference hash (dHash) per image — the standard
     perceptual fingerprint a multimodal corpus dedups on (round 12):
@@ -584,37 +607,14 @@ def dhash_images(media_df: DataFrame) -> DataFrame:
     O(pixels) per row; the fingerprint relation that leaves this op is
     16 bytes/image, which is what ``image_near_dup_pairs`` shuffles."""
 
-    def batches(it: Iterator) -> Iterator:
+    def fingerprint(raw, w, h):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, fps = [], []
-            for did, raw, w, h in zip(
-                pdf["doc_id"], pdf["media"], pdf["width"], pdf["height"]
-            ):
-                ids.append(None if pd.isna(did) else int(did))
-                if (
-                    raw is None
-                    or pd.isna(w)
-                    or pd.isna(h)
-                    or int(w) <= 0
-                    or int(h) <= 0
-                    or len(raw) != int(w) * int(h) * 3
-                ):
-                    fps.append(None)
-                    continue
-                w, h = int(w), int(h)
-                img = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, w, 3)
-                # signed-long conversion keeps bit 63 inside LongType
-                fps.append(_signed64(_dhash64(img)))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+        if raw is None or w is None or h is None or w <= 0 or h <= 0 or len(raw) != w * h * 3:
+            return None
+        return _dhash64(np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3))
 
-    return media_df.select("doc_id", "media", "width", "height").mapInPandas(
-        batches, DHASH_SCHEMA
-    )
+    return _map_fingerprints(media_df, ("media", "width", "height"), fingerprint)
 
 
 def video_fingerprints(video_df: DataFrame, n_sample_frames: int = 8) -> DataFrame:
@@ -633,43 +633,26 @@ def video_fingerprints(video_df: DataFrame, n_sample_frames: int = 8) -> DataFra
             f"n_sample_frames must be >= 1, got {n_sample_frames}"
         )
 
-    def batches(it: Iterator) -> Iterator:
+    def fingerprint(raw, w, h, nf):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids, fps = [], []
-            for did, raw, w, h, nf in zip(
-                pdf["doc_id"], pdf["media"], pdf["width"],
-                pdf["height"], pdf["n_frames"],
-            ):
-                ids.append(None if pd.isna(did) else int(did))
-                if (
-                    raw is None
-                    or pd.isna(w) or pd.isna(h) or pd.isna(nf)
-                    or int(w) <= 0 or int(h) <= 0 or int(nf) <= 0
-                    or len(raw) != int(w) * int(h) * 3 * int(nf)
-                ):
-                    fps.append(None)
-                    continue
-                w, h, nf = int(w), int(h), int(nf)
-                frames = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(
-                    nf, h, w, 3
-                )
-                take = np.unique(
-                    np.linspace(0, nf - 1, min(n_sample_frames, nf)).astype(int)
-                )
-                votes = np.zeros(64, dtype=np.int64)
-                for fi in take:
-                    votes += np.where(_dhash_bits(frames[fi]), 1, -1)
-                fps.append(_signed64(_bits_to_u64(votes > 0)))
-            yield pd.DataFrame({"doc_id": ids, "fp": fps})
+        if (
+            raw is None
+            or None in (w, h, nf)
+            or min(w, h, nf) <= 0
+            or len(raw) != w * h * 3 * nf
+        ):
+            return None
+        frames = np.frombuffer(raw, dtype=np.uint8).reshape(nf, h, w, 3)
+        take = np.unique(np.linspace(0, nf - 1, min(n_sample_frames, nf)).astype(int))
+        votes = np.zeros(64, dtype=np.int64)
+        for fi in take:
+            votes += np.where(_dhash_bits(frames[fi]), 1, -1)
+        return _bits_to_u64(votes > 0)
 
-    return video_df.select(
-        "doc_id", "media", "width", "height", "n_frames"
-    ).mapInPandas(batches, DHASH_SCHEMA)
+    return _map_fingerprints(
+        video_df, ("media", "width", "height", "n_frames"), fingerprint
+    )
 
 
 def video_near_dup_pairs(

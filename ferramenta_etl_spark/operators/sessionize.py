@@ -86,28 +86,34 @@ def _cap_jump_targets(ms, seg_starts, seg_ends, seg_of_row, cap_ms):
     own disjoint int64 lane (segment_index * stride) so ONE global
     searchsorted serves every segment. The lane product can silently
     wrap int64 when (many segments) x (wide time span) — ADVICE r13 —
-    so when n_seg * stride would overflow, fall back to one
-    searchsorted per segment: same answers, Python-loop-per-segment
-    cost, only on inputs whose span x segment-count is astronomically
-    past any real workload (the guard preserves correctness, not
-    speed, there)."""
+    so the lane geometry is computed in Python ints and, when either the
+    stride or n_seg * stride would reach 2^63, each segment gets its own
+    searchsorted instead: same answers, Python-loop-per-segment cost,
+    only on inputs whose span x segment-count is astronomically past any
+    real workload (the guard preserves correctness, not speed, there).
+    The fallback's ``ms + cap_ms`` thresholds saturate at the int64
+    maximum, so events at the very end of the range cannot wrap either."""
     import numpy as np
 
     n_seg = len(seg_starts)
     if n_seg == 0:
         return np.empty(0, dtype=np.int64)
-    stride = np.int64(int(ms.max()) - int(ms.min())) + cap_ms + 1
-    lim = np.iinfo(np.int64).max
-    # need max(adj) + cap_ms = (n_seg-1)*stride + span + cap_ms < lim;
-    # n_seg * stride bounds that sum with margin (stride > span + cap_ms)
-    if int(n_seg) * int(stride) < lim:
+    cap_ms = int(cap_ms)
+    span = int(ms.max()) - int(ms.min())
+    stride = span + cap_ms + 1
+    lim = 2**63
+    # max(adj) + cap_ms = (n_seg-1)*stride + span + cap_ms < n_seg*stride,
+    # so below these two bounds no lane value wraps
+    if stride < lim and n_seg * stride < lim:
         seg_len = seg_ends - seg_starts
-        adj = (ms - np.repeat(ms[seg_starts], seg_len)) + seg_of_row * stride
+        adj = (ms - np.repeat(ms[seg_starts], seg_len)) + seg_of_row * np.int64(stride)
         return np.searchsorted(adj, adj + cap_ms, side="right")
+    # saturating ms + cap_ms (cap_ms is a duration: 0 <= cap_ms < 2^63)
+    thresholds = np.minimum(ms, lim - 1 - cap_ms) + cap_ms
     nxt = np.empty(len(ms), dtype=np.int64)
     for i in range(n_seg):
         s, e = seg_starts[i], seg_ends[i]
-        nxt[s:e] = s + np.searchsorted(ms[s:e], ms[s:e] + cap_ms, side="right")
+        nxt[s:e] = s + np.searchsorted(ms[s:e], thresholds[s:e], side="right")
     return nxt
 
 

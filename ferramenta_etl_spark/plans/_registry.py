@@ -77,9 +77,15 @@ def plan_cache(fn):
             # (the curation/_persisted_deps convention), else a dataset
             # switch in one session (scale_experiment base -> scaled)
             # drops the only Python reference while the cached data
-            # stays pinned in executor storage
+            # stays pinned in executor storage. Read from the instance
+            # __dict__: getattr on a DataFrame falls through to
+            # DataFrame.__getattr__, a py4j column lookup that costs a
+            # round trip and raises once that session's JVM is gone.
+            # Cached values without a __dict__ (bucketed_facts returns a
+            # plain dict) have no deps.
             for old in cache.values():
-                for dep in getattr(old, "_persisted_deps", ()):
+                deps = getattr(old, "__dict__", {}).get("_persisted_deps", ())
+                for dep in deps:
                     try:
                         dep.unpersist()
                     except Exception:

@@ -18,6 +18,15 @@ Scale notes:
 - the anti-join is a plain equi-join: broadcastable when the sink is
   small, AQE-skew-handled when it is not.
 
+Write protocol (parquet backend): the survivors are materialized ONCE,
+by an eager ``localCheckpoint`` that cuts their lineage back to the
+sink, and counted in that same pass by an attached ``Observation``
+(:func:`checkpoint_count`) — no separate count action. A non-empty
+batch is then appended; into an absent sink the append itself creates
+the table. An empty batch appends nothing, and only then is the empty
+table bootstrapped (:func:`ensure_table`, ≙ S:166-186), so the sink
+exists after every write.
+
 Atomicity: the parquet backend's anti-join + append is not atomic by
 itself — two jobs could both pass the anti-join and append the same key
 — so it runs under an advisory writer LOCK (atomic-create sibling file,
@@ -46,7 +55,7 @@ import os
 import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_key
@@ -323,6 +332,18 @@ def ensure_table(
     return True
 
 
+def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize ``df`` and count its rows in ONE action: an eager
+    ``localCheckpoint`` with an ``Observation`` attached, so the count
+    needs no second pass. The checkpoint cuts the lineage back to the
+    inputs: a task retry or cache eviction during a later write to one of
+    them can never re-scan the path mid-write and double-read its own
+    output (plain ``.cache()`` could recompute)."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, int(obs.get["n"])
+
+
 def anti_join_keys(df: DataFrame, existing_keys: DataFrame, keys: Sequence[str]) -> DataFrame:
     """``df`` minus the rows whose key tuple already exists — NULL-SAFE
     (``<=>``), matching :func:`merge_insert_condition` and the in-batch
@@ -581,13 +602,12 @@ def _write_parquet_locked(
     keys: Sequence[str],
     partition_cols: Sequence[str],
 ) -> int:
-    """The parquet anti-join + append body; caller holds the sink lock."""
-    if ensure_table(spark, path, df, partition_cols) or not _has_data_files(
-        spark, path
-    ):
-        # a partitioned bootstrap holds no data files (zero rows write
-        # zero partition directories), so there is nothing to conflict
-        # with — reading it would fail schema inference
+    """The parquet anti-join + append body (see the module's write
+    protocol); caller holds the sink lock."""
+    if not _has_data_files(spark, path):
+        # an absent sink, or one holding only a partitioned bootstrap
+        # (zero rows write zero partition directories): there is nothing
+        # to conflict with, and reading it would fail schema inference
         fresh = incoming
     else:
         existing = spark.read.parquet(path)
@@ -623,16 +643,15 @@ def _write_parquet_locked(
             existing = existing.filter(_touched_partition_filter(incoming, partition_cols))
         existing_keys = existing.select(*keys)
         fresh = anti_join_keys(incoming, existing_keys, list(keys))
-    # Materialize the survivors BEFORE appending: localCheckpoint cuts
-    # the lineage back to the target parquet, so a task retry / cache
-    # eviction during the append can never re-scan the path mid-write
-    # and double-read its own output (plain .cache() could recompute).
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
+    fresh, n = checkpoint_count(fresh)
     if n:
+        # an absent sink directory is created by the append itself
         w = fresh.write.mode("append")
         if partition_cols:
             w = w.partitionBy(*partition_cols)
         w.parquet(path)
+    else:
+        # nothing to append: still leave an (empty) table behind
+        ensure_table(spark, path, df, partition_cols)
     log.info("appended %d rows to %s (ignore-conflicts on %s)", n, path, list(keys))
     return n

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .idempotent import checkpoint_count
+
 log = logging.getLogger(__name__)
 
 CORRUPT_COL = "_corrupt_record"
@@ -67,8 +69,7 @@ def quarantine_invalid(
     n_quarantined). The job continues with the valid rows — the engine's
     analog of the reference's skip-bad-batch-and-continue (S:231-236)."""
     valid, invalid = split_by_rules(df, rules)
-    invalid = invalid.localCheckpoint(eager=True)  # split scans the input once
-    n_bad = invalid.count()
+    invalid, n_bad = checkpoint_count(invalid)  # split scans the input once
     if n_bad:
         invalid.write.mode("append").parquet(quarantine_path)
         log.warning("quarantined %d rows to %s", n_bad, quarantine_path)

@@ -68,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import SchemaContractError
+from .idempotent import anti_join_keys, checkpoint_count
 
 log = logging.getLogger(__name__)
 
@@ -430,14 +431,11 @@ def write_merge_txlog(
             .parquet(*_abs_files(path, live))
             .select(*keys)
         )
-        from .idempotent import anti_join_keys
-
         return anti_join_keys(df, existing_keys, keys)
 
     # Materialize survivors BEFORE writing: cuts lineage so the write
     # and any OCC re-check never re-scan the source mid-flight.
-    fresh = survivors_against(snap.files, incoming).localCheckpoint(eager=True)
-    n = fresh.count()
+    fresh, n = checkpoint_count(survivors_against(snap.files, incoming))
     if n == 0:
         return 0
     entries, rel_dir = _write_batch(fresh, path, keys, stats_keys)
@@ -465,8 +463,7 @@ def write_merge_txlog(
         known = {e["path"] for e in snap.files}
         delta = [e for e in new_snap.files if e["path"] not in known]
         if delta:
-            remaining = survivors_against(delta, fresh).localCheckpoint(eager=True)
-            n2 = remaining.count()
+            remaining, n2 = checkpoint_count(survivors_against(delta, fresh))
             if n2 < n:
                 _delete_dir(spark, path, rel_dir)  # superseded, uncommitted
                 if n2 == 0:

@@ -602,3 +602,69 @@ def test_video_fingerprint_invariance_and_pairs(spark):
 
     with _pytest.raises(ValueError, match="n_sample_frames"):
         video_fingerprints(df, n_sample_frames=0)
+
+
+def _fingerprint_cases():
+    """(kernel, schema, valid rows, malformed row factory) for each
+    64-bit fingerprint kernel; doc_ids sit above 2^53, where a float64
+    round trip would change them."""
+    from ferramenta_etl_spark.operators.audio import audio_fingerprints
+    from ferramenta_etl_spark.operators.multimodal import (
+        dhash_images,
+        video_fingerprints,
+    )
+
+    rng = np.random.default_rng(5)
+    base = 2**60
+    images = [
+        (base + i, rng.integers(0, 256, (10, 14, 3), dtype=np.uint8).tobytes(), 14, 10)
+        for i in range(32)
+    ]
+    videos = [
+        (base + i, rng.integers(0, 256, (4, 10, 12, 3), dtype=np.uint8).tobytes(), 12, 10, 4)
+        for i in range(32)
+    ]
+    clips = [
+        (base + i, rng.integers(-20000, 20000, 400).astype("<i2").tobytes(), 8000)
+        for i in range(32)
+    ]
+    return [
+        (dhash_images, "doc_id long, media binary, width long, height long",
+         images, lambda d: (d, b"\x00" * 7, 14, 10)),
+        (video_fingerprints,
+         "doc_id long, media binary, width long, height long, n_frames long",
+         videos, lambda d: (d, b"\x00" * 7, 12, 10, 4)),
+        (audio_fingerprints, "doc_id long, media binary, sample_rate long",
+         clips, lambda d: (d, b"\x00" * 7, 8000)),
+    ]
+
+
+def test_fingerprints_invariant_to_malformed_rows_in_every_batch(spark):
+    """Every Arrow batch holds a malformed row (null fp), half of them
+    with a null doc_id too: the valid rows' fingerprints and ids are
+    exactly those computed with no malformed row anywhere, at 1, 4 and
+    32 partitions. A batch that mixes None into a plain int list would
+    turn the column into float64 and round every 64-bit value in it."""
+    from collections import Counter
+
+    for kernel, schema, valid, bad in _fingerprint_cases():
+        ref = {
+            r.doc_id: r.fp
+            for r in kernel(spark.createDataFrame(valid, schema)).collect()
+        }
+        assert len(ref) == len(valid) and None not in ref.values()
+        rows = []
+        for i, row in enumerate(valid):
+            # valid/malformed pairs: parallelize slices contiguously, so
+            # every partition (one Arrow batch each) gets a malformed row
+            rows += [row, bad(None if i % 2 else -(i + 1))]
+        want = Counter(ref.items())
+        want.update((-(i + 1), None) for i in range(0, len(valid), 2))
+        want[(None, None)] += len(valid) // 2
+        outs = []
+        for parts in (1, 4, 32):
+            df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+            assert df.rdd.getNumPartitions() == parts
+            outs.append(Counter((r.doc_id, r.fp) for r in kernel(df).collect()))
+        assert outs[0] == want, kernel.__name__
+        assert outs[0] == outs[1] == outs[2], kernel.__name__

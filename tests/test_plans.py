@@ -246,6 +246,56 @@ def test_dir_mtime_sees_part_file_rewritten_in_place(tmp_path):
     assert _dir_mtime(str(sf_dir)) >= future
 
 
+def test_plan_cache_eviction_never_calls_getattr(tmp_path):
+    """Evicting a cached plan reads its persisted dependencies from the
+    instance __dict__: a DataFrame's __getattr__ is a py4j column lookup
+    that raises once its session's JVM is gone, and costs a round trip
+    on every dataset switch while it is alive."""
+    from types import SimpleNamespace
+
+    from ferramenta_etl_spark.plans._registry import plan_cache
+
+    class DeadPlan:
+        def __getattr__(self, name):
+            raise RuntimeError(f"py4j: JVM is gone ({name})")
+
+    class Dep:
+        released = 0
+
+        def unpersist(self):
+            Dep.released += 1
+
+    built = []
+
+    @plan_cache
+    def build(spark, sf_dir):
+        plan = DeadPlan()
+        if sf_dir.endswith("day2"):
+            plan._persisted_deps = [Dep()]
+        built.append(sf_dir)
+        return plan
+
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    day1, day2, day3 = (str(tmp_path / d) for d in ("day1", "day2", "day3"))
+    first = build(spark, day1)
+    assert build(spark, day1) is first
+    build(spark, day2)  # evicts day1's plan, which has no deps
+    assert Dep.released == 0
+    build(spark, day3)  # evicts day2's plan and releases its dep
+    assert built == [day1, day2, day3] and Dep.released == 1
+
+    # cached values with no instance __dict__, as bucketed_facts returns
+    # a plain dict: evicting them must not raise and releases nothing
+    @plan_cache
+    def build_plain(spark, sf_dir):
+        return {"facts": DeadPlan()} if sf_dir.endswith("day1") else (1, 2)
+
+    assert isinstance(build_plain(spark, day1), dict)
+    assert build_plain(spark, day2) == (1, 2)  # evicts the dict
+    build_plain(spark, day3)  # evicts the tuple
+    assert Dep.released == 1
+
+
 def test_dsir_scoring_inlines_the_ratio_table(spark):
     """DSIR scoring must never shuffle the corpus for the model: since
     r13 the <=n_buckets-row log-ratio relation is collected at plan

@@ -434,6 +434,46 @@ def test_cap_jump_targets_overflow_fallback_matches_fast_path():
         assert seg_big[i] == want, i
 
 
+def test_cap_jump_targets_at_int64_extremes():
+    """ADVICE r14: the lane stride is computed in Python ints, so a span
+    near 2^63 (where np.int64(span) + cap_ms + 1 wraps negative and
+    slipped past the old guard) and events at the int64 maximum (where
+    ms + cap_ms wraps) take the per-segment fallback with brute-force
+    answers."""
+    import numpy as np
+
+    from ferramenta_etl_spark.operators.sessionize import _cap_jump_targets
+
+    lo, hi = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+    cap = 1000
+
+    def brute(ms, seg_starts, seg_ends):
+        out = []
+        for s, e in zip(seg_starts, seg_ends):
+            for i in range(s, e):
+                j = next((j for j in range(i, e) if int(ms[j]) > int(ms[i]) + cap), e)
+                out.append(j)
+        return out
+
+    cases = {
+        # one segment spanning the whole int64 range: span + cap + 1 > 2^63
+        "full_range": [[lo, lo + 10, 0, hi - 2000, hi - 5, hi]],
+        # the stride alone fits but n_seg * stride does not
+        "many_wide": [[0, 500, 2**62], [1, 2, 3], [7, 2000]],
+        # events within cap_ms of the int64 maximum
+        "near_max": [[hi - 3000, hi - 1500, hi - 10, hi], [hi - 1, hi]],
+        "near_min": [[lo, lo + 999, lo + 1001], [lo + 5]],
+    }
+    for name, segs in cases.items():
+        ms = np.array([v for seg in segs for v in seg], dtype=np.int64)
+        lens = np.array([len(seg) for seg in segs])
+        seg_ends = np.cumsum(lens).astype(np.int64)
+        seg_starts = seg_ends - lens
+        seg_of_row = np.repeat(np.arange(len(segs)), lens)
+        got = _cap_jump_targets(ms, seg_starts, seg_ends, seg_of_row, np.int64(cap))
+        assert list(got) == brute(ms, seg_starts, seg_ends), name
+
+
 def test_capped_sessions_null_tiebreak_does_not_crash(spark):
     """ADVICE r13: np.lexsort over a raw object-dtype tiebreak column
     raises TypeError when it holds None/mixed types; the pandas
